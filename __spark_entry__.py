@@ -407,6 +407,11 @@ _R15_NEXT: tuple[str, ...] = (
     "dd06_dedup_clusters",
     "st08_cdc_pipeline_bucketed",
     "st09_stream_ivm_agg",
+    # the single state table: the continuous rollup moved onto a
+    # one-bucket BucketedStateTable (epoch-id replay guard) and io18
+    # publishes its baseline through its own staged audit
+    "st05_continuous_rollup",
+    "io18_write_audit_publish",
 )
 
 _R10_RANK = {n: i for i, n in enumerate(_R10_PREFIX)}

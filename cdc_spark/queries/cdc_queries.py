@@ -1146,7 +1146,7 @@ def cdc18_dead_letter_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cdc_spark.streaming.state import BucketedStateTable
+    from cdc_spark.streaming.state import BucketedStateTable, Touched
 
     events = load_table(spark, sf_dir, "events")
     # ONE materialization of the change projection for the whole replay
@@ -1177,32 +1177,19 @@ def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE pass computes every replay batch's touched-bucket info
     # (round 14, guide §1.2: each apply otherwise runs its own bounded
     # scan job over its slice — 3 jobs re-reading the same checkpointed
-    # log). Slice membership is a pure lsn expression, so a single
-    # grouped aggregate yields (touched set, has_truncate, max lsn)
-    # per batch; the applies then skip their scans entirely while
-    # keeping bucket pruning exact.
+    # log). Slice membership is a pure lsn expression, so the apply's
+    # own touched-bucket aggregate, grouped by slice, yields every
+    # batch's ``Touched``; the applies then skip their scans entirely
+    # while keeping bucket pruning exact.
     slice_id = F.when(F.col("lsn") <= mx // 3, F.lit(0)).when(
         F.col("lsn") <= 2 * mx // 3, F.lit(1)
     ).otherwise(F.lit(2))
     info_rows = (
-        changes.select(
-            slice_id.alias("__s"),
-            state._bucket_expr().alias("__b"),
-            (F.col("op") == "t").alias("__t"),
-            "lsn",
-        )
-        .groupBy("__s")
-        .agg(
-            F.collect_set("__b").alias("bs"),
-            F.max("__t").alias("has_t"),
-            F.max("lsn").alias("mx"),
-        )
+        changes.groupBy(slice_id.alias("__s"))
+        .agg(*state.touched_aggs())
         .collect()
     )
-    infos = {
-        r["__s"]: (set(r["bs"]), bool(r["has_t"]), r["mx"])
-        for r in info_rows
-    }
+    infos = {r["__s"]: Touched.from_row(r) for r in info_rows}
     versions = []
     for i, (lo, hi) in enumerate(bounds):
         b = changes
@@ -1214,7 +1201,7 @@ def cdc19_version_diff_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             state.apply(
                 b,
                 ["event_type", "value"],
-                touched_info=infos.get(i, (set(), False, None)),
+                touched_info=infos.get(i, Touched(set(), False)),
             )
         )
     return state.version_diff(versions[0], versions[-1])

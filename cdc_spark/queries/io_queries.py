@@ -972,15 +972,14 @@ def io17_type_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("io", "wap", "audit", "publish"),
 )
 def io18_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cdc_spark.streaming.pipeline import VersionedStateTable
     from cdc_spark.streaming.state import _fsync_replace
 
     orders = load_table(spark, sf_dir, "orders")
     d = tempfile.mkdtemp(prefix="io18_wap_")
-    vt = VersionedStateTable(spark, d)
-    # baseline publish
-    vt.write(orders.where(F.col("o_orderkey") % 7 == 0))
-    v_before = vt.current_version()
+
+    def published() -> int:
+        with open(os.path.join(d, "CURRENT")) as fh:
+            return int(fh.read())
 
     def stage_and_audit(df, v):
         target = os.path.join(d, f"v{v}")
@@ -1008,6 +1007,11 @@ def io18_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return ok
 
+    # baseline publish, through the same audit
+    if not stage_and_audit(orders.where(F.col("o_orderkey") % 7 == 0), 1):
+        raise AssertionError("audit rejected the baseline snapshot")
+    v_before = published()
+
     # corrupt snapshot: a null key and a duplicated key sneak in
     base = orders.where(F.col("o_orderkey") % 3 != 0)
     corrupt = base.unionByName(
@@ -1018,15 +1022,15 @@ def io18_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(base.limit(1))
     if stage_and_audit(corrupt, v_before + 1):
         raise AssertionError("audit passed a corrupt snapshot")
-    if vt.current_version() != v_before:
+    if published() != v_before:
         raise AssertionError("failed audit moved the published pointer")
 
     # clean snapshot publishes
     if not stage_and_audit(base, v_before + 2):
         raise AssertionError("audit rejected a clean snapshot")
 
-    published = vt.read()
-    return published.groupBy("o_orderstatus").agg(
+    snapshot = spark.read.parquet(os.path.join(d, f"v{published()}"))
+    return snapshot.groupBy("o_orderstatus").agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
         .cast("double")

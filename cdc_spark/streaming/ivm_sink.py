@@ -91,18 +91,19 @@ class IncrementalAggregate:
     ) -> int | None:
         """Apply one change batch to the row state AND the aggregate.
 
-        Returns the new row-state version. The touched-bucket scan
-        duplicates the one ``BucketedStateTable.apply`` runs — two
-        bounded 1-row jobs per batch, accepted for composability.
+        Returns the new row-state version. The batch is scanned once
+        (:meth:`BucketedStateTable.scan_touched`): the result decides
+        the path here and is handed to the row-state apply, which then
+        skips its own scan.
         """
         from cdc_spark.cdc.merge import apply_changes
 
         st = self.state
-        v_cur = st.current_version()
+        v_cur, man = st._current()
         if (
             batch_id is not None
-            and v_cur is not None
-            and st._load_manifest(v_cur).get("batch_id") == batch_id
+            and man is not None
+            and man.get("batch_id") == batch_id
         ):
             # exactly-once replay skip: the row state already has this
             # epoch; _sync catches the aggregate up if its merge was
@@ -111,19 +112,12 @@ class IncrementalAggregate:
             return v_cur
         self._sync_with_state(v_cur)
 
-        ch = changes.withColumn(_BUCKET, st._bucket_expr())
-        info = ch.agg(
-            F.collect_set(F.col(_BUCKET)).alias("bs"),
-            F.max(F.col(op_col) == "t").alias("has_t"),
-            F.max(F.col(lsn_col)).alias("mx"),
-        ).first()
-        touched = sorted(info["bs"] or ())
+        touched_info = st.scan_touched(changes, lsn_col=lsn_col, op_col=op_col)
+        touched = sorted(touched_info.buckets)
         if not touched:
             return v_cur
-        any_t = bool(info["has_t"])
-        touched_info = (set(touched), any_t, info["mx"])
 
-        if any_t:
+        if touched_info.has_truncate:
             # truncate: every key dies — O(state) by necessity. Compute
             # post in-plan (apply_changes over the whole old state) and
             # diff against the full pre image.
@@ -227,7 +221,7 @@ class IncrementalAggregate:
         row state then folds a zero delta, so the combination gives
         effectively-once aggregate maintenance on top of an
         at-least-once stream."""
-        v_agg = self.table.current_version()
+        v_agg, agg_man = self.table._current()
         if v_agg is None:
             if v_cur is not None:
                 # adopting an existing row state: backfill the aggregate
@@ -244,7 +238,7 @@ class IncrementalAggregate:
                     extra_meta={"row_version": v_cur},
                 )
             return
-        rv = self.table._load_manifest(v_agg).get("row_version")
+        rv = agg_man.get("row_version")
         if rv == v_cur or v_cur is None:
             return
         try:

@@ -9,9 +9,12 @@ a re-scan of history. Algebraic partials (count/sum/min/max) merge
 exactly; with decimal sums the rollup equals the from-scratch batch
 aggregate bit-for-bit (tested).
 
-At scale the state table is partitioned by bucket date so the merge
-join prunes to the buckets the batch touches (late data only reopens
-old buckets within the watermark horizon).
+The rollup lives in a one-bucket ``BucketedStateTable`` keyed by
+(bucket_start, *dims): each batch rewrites the whole (small) rollup
+snapshot, and the committed manifest records the epoch id, so a
+replayed foreachBatch epoch is skipped instead of adding its partials
+twice — the idempotent-sink-per-epoch contract exactly-once output
+depends on.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_spark.streaming.pipeline import VersionedStateTable
+from cdc_spark.streaming.state import BucketedStateTable
 
 
 class ContinuousRollup:
@@ -38,11 +41,13 @@ class ContinuousRollup:
         value_col: str = "value",
     ):
         self.spark = spark
-        self.state = VersionedStateTable(spark, state_path)
         self.ts_col = ts_col
         self.bucket = bucket
         self.dims = list(dims)
         self.value_col = value_col
+        self.state = BucketedStateTable(
+            spark, state_path, ["bucket_start", *self.dims], n_buckets=1
+        )
 
     def _partials(self, batch: DataFrame) -> DataFrame:
         return (
@@ -63,7 +68,12 @@ class ContinuousRollup:
         )
 
     def apply_batch(self, batch: DataFrame, epoch_id: int = 0) -> None:
-        """foreachBatch body: merge this batch's partials into state."""
+        """foreachBatch body: merge this batch's partials into state.
+        A replayed epoch (a crash between this commit and the stream's
+        checkpoint commit) is already in the state and is skipped."""
+        progress = self.state.replication_progress()
+        if progress is not None and progress["batch_id"] == epoch_id:
+            return
         partials = self._partials(batch)
         base = self.state.read()
         if base is None:
@@ -80,7 +90,9 @@ class ContinuousRollup:
                     F.max("max_value").alias("max_value"),
                 )
             )
-        self.state.write(merged)
+        self.state.overwrite_buckets(
+            merged, [0], extra_meta={"batch_id": epoch_id}
+        )
 
     def read(self) -> DataFrame | None:
         """Current rollup with derived columns (avg from exact partials)."""

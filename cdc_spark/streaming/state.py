@@ -18,7 +18,7 @@ Delta-MERGE-shaped semantics without Delta jars:
   missing pointer falls back to the highest version with a readable
   manifest, so a crash mid-write never bricks the table;
 - immutable versions double as the audit trail: ``read(version=...)``
-  time-travels, exactly as in ``VersionedStateTable``.
+  time-travels to any version not yet vacuumed.
 
 Sizing: pick ``n_buckets`` so a bucket is a few tens of GB at the
 target scale (100 TB / 4096 ≈ 25 GB). A batch touching k distinct
@@ -31,14 +31,39 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from cdc_spark.cdc.merge import apply_changes
 
 _BUCKET = "__bucket"
+
+
+class Touched(NamedTuple):
+    """What one change batch touches, from one bounded 1-row scan
+    (:meth:`BucketedStateTable.scan_touched`). A caller that already
+    scanned the batch builds one and passes it to ``apply``; omitted
+    fields take the safe values — no LSN watermark advance, and the
+    merge path rather than the insert-only append."""
+
+    buckets: set
+    has_truncate: bool
+    max_lsn: int | None = None
+    # every op is an insert ('c'/'r'): the append path may run
+    only_inserts: bool = False
+
+    @classmethod
+    def from_row(cls, row: Row) -> Touched:
+        """Read one row of :meth:`BucketedStateTable.touched_aggs`."""
+        return cls(
+            set(row["bs"] or ()),
+            bool(row["has_t"]),
+            row["mx"],
+            bool(row["only_ins"]),
+        )
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -134,7 +159,7 @@ class BucketedStateTable:
         # state, where the extra full shuffle of touched data per
         # micro-batch is the wrong trade.
         self.one_file_per_bucket = one_file_per_bucket
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(self.path, exist_ok=True)
 
     # --- layout -------------------------------------------------------
 
@@ -160,32 +185,43 @@ class BucketedStateTable:
         return list(rel) if isinstance(rel, list) else [rel]
 
     def current_version(self) -> int | None:
+        return self._current()[0]
+
+    def _current(self) -> tuple[int | None, dict | None]:
+        """The current version and its manifest, loaded once: the
+        pointer must reference a readable manifest, and callers reuse
+        the one loaded to check that."""
         try:
             with open(self._pointer) as fh:
                 v = int(fh.read().strip())
-            # pointer must reference a readable manifest
-            self._load_manifest(v)
-            return v
+            return v, self._load_manifest(v)
         except (FileNotFoundError, ValueError, json.JSONDecodeError):
             return self._recover_version()
 
-    def _recover_version(self) -> int | None:
+    def _at(self, version: int | None) -> tuple[int | None, dict | None]:
+        """``version`` and its manifest; the current ones for None."""
+        if version is None:
+            return self._current()
+        return version, self._load_manifest(version)
+
+    def _recover_version(self) -> tuple[int | None, dict | None]:
         """Corrupt/missing pointer: highest version with a valid
         manifest (a version directory without one is an aborted write)."""
-        best = None
+        best_v, best_man = None, None
         try:
             names = os.listdir(self.path)
         except FileNotFoundError:
-            return None
+            return None, None
         for name in names:
             if name.startswith("v") and name[1:].isdigit():
                 v = int(name[1:])
                 try:
-                    self._load_manifest(v)
+                    man = self._load_manifest(v)
                 except (FileNotFoundError, json.JSONDecodeError):
                     continue
-                best = v if best is None else max(best, v)
-        return best
+                if best_v is None or v > best_v:
+                    best_v, best_man = v, man
+        return best_v, best_man
 
     # --- bucketing ----------------------------------------------------
 
@@ -203,10 +239,9 @@ class BucketedStateTable:
         """``session`` reparents the scan (e.g. onto a foreachBatch
         micro-batch session so it can compose with the batch frame in
         one SQL text); default is the table's own session."""
-        v = self.current_version() if version is None else version
+        v, man = self._at(version)
         if v is None:
             return None
-        man = self._load_manifest(v)
         return self._read_manifest(man, session=session)
 
     def read_as_of_lsn(self, lsn: int) -> DataFrame | None:
@@ -331,10 +366,9 @@ class BucketedStateTable:
         opened — the I/O analog of partition pruning, O(touched
         buckets) regardless of table size. Buckets with no files yet
         are silently absent (an empty bucket has no rows)."""
-        v = self.current_version() if version is None else version
+        v, man = self._at(version)
         if v is None:
             return None
-        man = self._load_manifest(v)
         wanted = {str(int(b)) for b in bucket_ids}
         dirs = [
             os.path.join(self.path, r)
@@ -370,10 +404,9 @@ class BucketedStateTable:
         """
         import pyarrow.parquet as pq
 
-        v = self.current_version() if version is None else version
+        v, man = self._at(version)
         if v is None:
             return None
-        man = self._load_manifest(v)
         total = 0
         dirs = [
             os.path.join(self.path, r)
@@ -405,6 +438,34 @@ class BucketedStateTable:
 
     # --- incremental apply -------------------------------------------
 
+    def touched_aggs(self, *, lsn_col: str = "lsn", op_col: str = "op"):
+        """The touched-bucket scan's aggregate columns; one result row
+        reads back through :meth:`Touched.from_row`. Which buckets the
+        batch touches, whether it truncates (truncate wipes every key,
+        so every bucket is dirty), its high LSN (the reference's
+        standby ack position, main.go:61-74), and whether every op is
+        an insert — all in one aggregate, so one scan job."""
+        op = F.col(op_col)
+        return [
+            F.collect_set(self._bucket_expr()).alias("bs"),
+            F.max(op == "t").alias("has_t"),
+            F.max(F.col(lsn_col)).alias("mx"),
+            # a null op is no insert (the merge drops its key)
+            (~F.max(op.isNull() | ~op.isin("c", "r"))).alias("only_ins"),
+        ]
+
+    def scan_touched(
+        self, changes: DataFrame, *, lsn_col: str = "lsn", op_col: str = "op"
+    ) -> Touched:
+        """One bounded 1-row job over the batch. A global aggregate —
+        collect_set is capped at n_buckets — gets map-side partials and
+        a single-row exchange, ~3x cheaper per micro-batch than a
+        grouped shuffle."""
+        row = changes.agg(
+            *self.touched_aggs(lsn_col=lsn_col, op_col=op_col)
+        ).first()
+        return Touched.from_row(row)
+
     def apply(
         self,
         changes: DataFrame,
@@ -412,14 +473,14 @@ class BucketedStateTable:
         *,
         lsn_col: str = "lsn",
         op_col: str = "op",
-        touched_info: tuple[set, bool] | None = None,
+        touched_info: Touched | None = None,
         batch_id: int | None = None,
         insert_only: bool = False,
     ) -> int | None:
         """Merge one batch of typed changes; rewrite only touched
         buckets. Returns the new version (or the current one for an
-        empty batch). ``touched_info=(bucket_ids, has_truncate)`` lets
-        a caller that already scanned the batch skip the scan here.
+        empty batch). ``touched_info`` lets a caller that already
+        scanned the batch skip the scan here.
 
         ``insert_only=True`` is the caller's GUARANTEE that no change
         key exists in the current state (e.g. the batch was anti-joined
@@ -431,12 +492,14 @@ class BucketedStateTable:
         rewriting terabytes per probe batch. Reads union a bucket's
         generation list (read/read_buckets/version_diff/row_count all
         flatten it); once a touched bucket reaches ``max_generations``
-        the apply silently falls back to the merge path, folding those
-        buckets to one directory again. A violated guarantee surfaces
-        as duplicate keys in ``read()`` — the caller owns the contract
+        the apply falls back to the merge path, folding those buckets
+        to one directory again. The append runs only when the batch's
+        ops are all inserts (``Touched.only_inserts``); updates,
+        deletes and truncates take the merge path. A violated
+        guarantee — an inserted key that already exists — surfaces as
+        duplicate keys in ``read()``: the caller owns that contract
         (this table stores final images, so it cannot re-check without
-        the probe the caller already ran). Truncates always take the
-        merge path.
+        the probe the caller already ran).
 
         ``batch_id`` (a foreachBatch epoch id) upgrades at-least-once
         replay to exactly-once apply: the committed manifest records
@@ -451,61 +514,40 @@ class BucketedStateTable:
         manifest already records batch_id=0 from the prior run, the
         first legitimate new batch would be silently dropped. Reset
         (or retarget) both together — never just the checkpoint."""
-        v_cur = self.current_version()
+        v_cur, man = self._current()
         if (
             batch_id is not None
-            and v_cur is not None
-            and self._load_manifest(v_cur).get("batch_id") == batch_id
+            and man is not None
+            and man.get("batch_id") == batch_id
         ):
             return v_cur
-        ch = changes.withColumn(_BUCKET, self._bucket_expr())
-
-        if touched_info is None:
-            # one bounded 1-row job: which buckets does this batch
-            # touch, does it truncate (truncate wipes every key, so
-            # every bucket is dirty), and what is its high LSN (the
-            # reference's standby ack position, main.go:61-74 — free
-            # here, folded into the same scan)? A global aggregate —
-            # collect_set is capped at n_buckets — gets map-side
-            # partials and a single-row exchange, ~3x cheaper per
-            # micro-batch than a grouped shuffle.
-            info = ch.agg(
-                F.collect_set(F.col(_BUCKET)).alias("bs"),
-                F.max(F.col(op_col) == "t").alias("has_t"),
-                F.max(F.col(lsn_col)).alias("mx"),
-            ).first()
-            touched_info = (
-                set(info["bs"] or ()),
-                bool(info["has_t"]),
-                info["mx"],
-            )
-        touched, any_t = set(touched_info[0]), touched_info[1]
-        batch_max_lsn = touched_info[2] if len(touched_info) > 2 else None
+        info = touched_info
+        if info is None:
+            info = self.scan_touched(changes, lsn_col=lsn_col, op_col=op_col)
+        touched = set(info.buckets)
         if not touched:
             return v_cur  # empty batch: no new version
-        if any_t:
+        if info.has_truncate:
             touched = set(range(self.n_buckets))
 
         # insert-only append path: no base read, no merge joins — the
-        # fold of the batch alone IS the buckets' delta content
+        # fold of the batch alone IS the buckets' delta content; a
+        # touched bucket at the generation cap folds via the merge path
         append = (
             insert_only
-            and not any_t
-            and v_cur is not None
-        )
-        if append:
-            man = self._load_manifest(v_cur)
-            if any(
+            and info.only_inserts
+            and not info.has_truncate
+            and man is not None
+            and not any(
                 len(self._rels(man["buckets"][str(b)]))
                 >= self.max_generations
                 for b in touched
                 if str(b) in man["buckets"]
-            ):
-                append = False  # cap reached: fold via the merge path
+            )
+        )
 
         base = None
-        if v_cur is not None and not append:
-            man = self._load_manifest(v_cur)
+        if man is not None and not append:
             base_dirs = [
                 os.path.join(self.path, r)
                 for b, rel in man["buckets"].items()
@@ -522,6 +564,7 @@ class BucketedStateTable:
                     man, base_dirs, session=changes.sparkSession
                 )
 
+        ch = changes.withColumn(_BUCKET, self._bucket_expr())
         if len(touched) < self.n_buckets:
             ch = ch.where(F.col(_BUCKET).isin([int(b) for b in touched]))
         # mid-stream schema evolution (the reference's migration-002
@@ -548,17 +591,15 @@ class BucketedStateTable:
             op_col=op_col,
             # the touched-bucket scan above already looked at every op:
             # skip the truncate subplan when none is present
-            may_truncate=any_t,
+            may_truncate=info.has_truncate,
         )
 
         # applied-LSN watermark: the confirmed replication position
         # (monotone across versions; the analog of the standby status
         # update the reference sends every 10s)
-        prev_lsn = None
-        if v_cur is not None:
-            prev_lsn = self._load_manifest(v_cur).get("applied_lsn")
+        prev_lsn = man.get("applied_lsn") if man is not None else None
         applied = max(
-            (x for x in (prev_lsn, batch_max_lsn) if x is not None),
+            (x for x in (prev_lsn, info.max_lsn) if x is not None),
             default=None,
         )
         meta: dict = {}
@@ -567,7 +608,7 @@ class BucketedStateTable:
         if applied is not None:
             meta["applied_lsn"] = applied
         return self._commit_new_version(
-            new_state, touched, v_cur, meta or None, append=append
+            new_state, touched, v_cur, man, meta or None, append=append
         )
 
     def vacuum(self, *, keep_last: int = 2) -> dict:
@@ -622,10 +663,9 @@ class BucketedStateTable:
         reference acks its applied LSN upstream every 10s,
         main.go:61-74; here the manifest IS the ack record). Pure
         manifest reads, no Spark job."""
-        v = self.current_version()
+        v, man = self._current()
         if v is None:
             return None
-        man = self._load_manifest(v)
         return {
             "version": v,
             "applied_lsn": man.get("applied_lsn"),
@@ -648,19 +688,18 @@ class BucketedStateTable:
         that already computed the buckets' final rows — no merge.
         ``extra_meta`` lands in the new version's manifest (e.g. the
         row-state version a derived aggregate reflects)."""
-        v_cur = self.current_version() if version is None else version
+        v_cur, man = self._at(version)
         return self._commit_new_version(
-            new_rows, {int(b) for b in bucket_ids}, v_cur, extra_meta
+            new_rows, {int(b) for b in bucket_ids}, v_cur, man, extra_meta
         )
 
     def commit_meta(self, extra_meta: dict, *, version: int | None = None) -> int:
         """Metadata-only commit: a new version inheriting every bucket
         unchanged, with ``extra_meta`` merged into the manifest. No
         Spark job — pure manifest/pointer work."""
-        v_cur = self.current_version() if version is None else version
+        v_cur, prev = self._at(version)
         if v_cur is None:
             raise ValueError("commit_meta requires an existing version")
-        prev = self._load_manifest(v_cur)
         v_new = v_cur + 1
         os.makedirs(self._version_dir(v_new), exist_ok=True)
         manifest = {
@@ -685,13 +724,16 @@ class BucketedStateTable:
         new_state: DataFrame,
         touched: set,
         v_cur: int | None,
+        prev_man: dict | None,
         extra_meta: dict | None = None,
         *,
         append: bool = False,
     ) -> int:
-        prev_buckets: dict[str, str | list] = {}
-        if v_cur is not None:
-            prev_buckets = self._load_manifest(v_cur)["buckets"]
+        """Write ``new_state`` as version ``v_cur + 1`` on top of
+        ``prev_man`` (``v_cur``'s manifest, as the caller loaded it)."""
+        prev_buckets: dict[str, str | list] = (
+            prev_man["buckets"] if prev_man is not None else {}
+        )
         v_new = (v_cur or 0) + 1
         target = self._version_dir(v_new)
         # no pre-write repartition (saves a full shuffle of the touched

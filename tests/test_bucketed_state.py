@@ -594,12 +594,14 @@ def test_version_diff_across_schema_evolution(spark, table):
     assert 2 not in got  # untouched key in an inherited bucket
 
 
-def test_local_fs_path_seam(spark, tmp_path):
+def test_local_fs_path_seam(spark, tmp_path, monkeypatch):
     """Round 14: the state layer's file IO (manifests, pointer, footer
     counts) is local-filesystem-only through ONE seam — a file: URI
     normalizes to the bare path, any other scheme fails loudly instead
     of feeding a URI to os.listdir."""
     from cdc_spark.streaming.state import local_fs_path
+
+    monkeypatch.chdir(tmp_path)  # a stray relative "file:" tree lands here
 
     p = str(tmp_path / "seam_state")
     assert local_fs_path(p) == p
@@ -619,6 +621,7 @@ def test_local_fs_path_seam(spark, tmp_path):
     assert t.path == p
     assert t.row_count() == 2
     assert t.read().count() == 2
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("file:")]
 
     with pytest.raises(NotImplementedError):
         BucketedStateTable(spark, "s3://bucket/state", ["id"])
@@ -702,6 +705,43 @@ def test_insert_only_append_generations(spark, tmp_path):
         (r["op"], r["id"]) for r in ta.version_diff(v1, v2).collect()
     }
     assert diff == {("c", i) for i in range(100, 110)}
+
+
+def test_insert_only_mixed_ops_take_merge_path(spark, tmp_path):
+    """insert_only=True on a batch that also updates and deletes
+    existing keys must give the merge path's result: the delete takes
+    effect and the update leaves one row, not two."""
+    ta = BucketedStateTable(spark, str(tmp_path / "app"), ["id"], n_buckets=4)
+    tb = BucketedStateTable(spark, str(tmp_path / "ref"), ["id"], n_buckets=4)
+    seed = [(i, "s", i, "c", i) for i in range(1, 9)]
+    batch = [(2, "u", 20, "u", 10), (3, None, None, "d", 11), (50, "n", 5, "c", 12)]
+    for t in (ta, tb):
+        t.apply(_changes(spark, seed), ["name", "qty"])
+    ta.apply(_changes(spark, batch), ["name", "qty"], insert_only=True)
+    tb.apply(_changes(spark, batch), ["name", "qty"])
+    got = sorted(tuple(r) for r in ta.read().collect())
+    assert got == sorted(tuple(r) for r in tb.read().collect())
+    assert len(got) == 8 and (2, "u", 20) in got
+
+
+def test_merge_apply_loads_current_manifest_once(spark, table, monkeypatch):
+    """One apply reads the current manifest once: the pointer check,
+    replay guard, base directories, previous LSN and commit all share
+    it."""
+    table.apply(_changes(spark, [(1, "a", 1, "c", 1)]), ["name", "qty"])
+    v = table.current_version()
+    loads = []
+    load = table._load_manifest
+    monkeypatch.setattr(
+        table, "_load_manifest", lambda w: loads.append(w) or load(w)
+    )
+    batch = [(1, "b", 2, "u", 2), (2, "c", 3, "c", 3)]
+    v_new = table.apply(
+        _changes(spark, batch), ["name", "qty"], batch_id=4, insert_only=True
+    )
+    assert loads == [v]
+    buckets = _manifest(table, v_new)["buckets"].values()
+    assert not any(isinstance(rel, list) for rel in buckets)  # merge path
 
 
 def test_insert_only_generation_cap_folds(spark, tmp_path):

@@ -147,17 +147,17 @@ def test_kafka_connectors_configure_without_broker(spark):
 
 def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     from cdc_spark.operators.maintenance import (
-        compact,
+        compact_buckets,
         dir_file_stats,
         needs_compaction,
     )
-    from cdc_spark.streaming.pipeline import VersionedStateTable
+    from cdc_spark.streaming.state import BucketedStateTable
 
-    state = VersionedStateTable(spark, str(tmp_path / "tbl"))
+    state = BucketedStateTable(spark, str(tmp_path / "tbl"), ["id"], n_buckets=1)
     df = spark.range(10_000).select(
         F.col("id"), (F.col("id") % 7).alias("k")
     )
-    v1 = state.write(df.repartition(64))  # fragmented: 64 tiny files
+    v1 = state.overwrite_buckets(df.repartition(64), [0])  # 64 tiny files
 
     import os
 
@@ -165,7 +165,7 @@ def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     assert stats["n_files"] == 64
     assert needs_compaction(stats, target_file_bytes=1 << 20)
 
-    v2 = compact(state, target_file_bytes=1 << 20, sort_by=["id"])
+    v2 = compact_buckets(state, target_file_bytes=1 << 20)
     stats2 = dir_file_stats(os.path.join(state.path, f"v{v2}"))
     assert stats2["n_files"] < 8
     assert not needs_compaction(stats2, target_file_bytes=1 << 20)
@@ -174,14 +174,6 @@ def test_compaction_reduces_files_preserves_content(spark, tmp_path):
     assert state.read().exceptAll(df).count() == 0
     assert df.exceptAll(state.read()).count() == 0
     assert state.read(version=v1).count() == 10_000
-
-    # sorted layout: each file covers a narrow disjoint id range
-    files = state.read().select(
-        F.input_file_name().alias("f"), "id"
-    ).groupBy("f").agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
-    rows = sorted(files.collect(), key=lambda r: r.lo)
-    for a, b in zip(rows, rows[1:]):
-        assert a.hi < b.lo  # disjoint → parquet footer stats prune files
 
 
 def test_sessionizer_folds_chunks_in_global_time_order():

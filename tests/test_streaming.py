@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from cdc_spark.cdc.registry import SchemaRegistry
 from cdc_spark.streaming.pipeline import (
     CdcStreamPipeline,
-    VersionedStateTable,
     sessionized_counts,
     stream_dedup,
     windowed_agg,
@@ -123,16 +122,6 @@ def test_checkpoint_restart_no_reprocessing(spark, dirs):
     state = {r.id: r.firstname for r in pipe.state.read().collect()}
     assert state == {1: "A2"}
     assert pipe.state.current_version() == v_after_first + 1
-
-
-def test_versioned_state_table_swap(spark):
-    with tempfile.TemporaryDirectory() as d:
-        t = VersionedStateTable(spark, d)
-        assert t.read() is None
-        t.write(spark.createDataFrame([(1, "a")], "id int, v string"))
-        t.write(spark.createDataFrame([(2, "b")], "id int, v string"))
-        assert t.current_version() == 2
-        assert t.read().collect()[0].id == 2
 
 
 def _memory_stream(spark, rows, schema):
@@ -317,6 +306,27 @@ def test_continuous_rollup_incremental_equals_batch(spark):
     assert got[("2024-01-01 00:00:00", "click")] == (3, 14.0, round(14.0 / 3, 6))
     assert got[("2024-01-01 01:00:00", "view")] == (1, 4.0, 4.0)
     assert got[("2024-01-01 02:00:00", "view")] == (1, 1.0, 1.0)
+
+
+def test_continuous_rollup_replayed_epoch_is_skipped(spark):
+    """A replayed foreachBatch epoch (a crash between the rollup's
+    commit and the stream's checkpoint commit) must not add its
+    partials a second time."""
+    import datetime as dt
+
+    from cdc_spark.streaming.rollup import ContinuousRollup
+
+    t = dt.datetime(2024, 1, 1)
+    batch = spark.createDataFrame(
+        [(t, "click", 1.5), (t + dt.timedelta(minutes=30), "click", 2.5)],
+        "ts timestamp, event_type string, value double",
+    )
+    rollup = ContinuousRollup(spark, tempfile.mkdtemp(), dims=["event_type"])
+    rollup.apply_batch(batch, epoch_id=0)
+    once = rollup.read().collect()
+    rollup.apply_batch(batch, epoch_id=0)  # replay
+    assert rollup.read().collect() == once
+    assert [(r.n, r.sum_value) for r in once] == [(2, 4.0)]
 
 
 def test_multi_table_stream_routing(spark):
